@@ -34,11 +34,16 @@ object Bench {
         SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
+    // a failed pass keeps its cause on stderr: the JSON line only
+    // carries the query name and a negative time
+    def reportFailure(name: String, pass: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $name $pass failed: " +
+        s"${e.getClass.getName}: ${e.getMessage}")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      selected.foreach { case (_, fn) =>
+      selected.foreach { case (name, fn) =>
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => }
+        catch { case e: Throwable => reportFailure(name, "warm-up", e) }
         spark.catalog.clearCache()
       }
     }
@@ -51,7 +56,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable => reportFailure(name, "timed pass", e); false }
         // queries that cache intermediates (LSH signatures, shingle tables)
         // must not hold executor memory across the rest of the run
         spark.catalog.clearCache()

@@ -30,15 +30,13 @@ package graft
   */
 object OracleSql {
 
-  /** q216 (incremental curation-plan maintenance) shares q214's oracle
-    * VERBATIM: the engine computes the maintained (kept ∪ recomputed)
-    * plan over stored base state + one ingest batch, the oracle
-    * recomputes the union from scratch — hash equality at the gate IS
-    * the maintenance theorem at the plan grain (the q213 discipline).
-    * The kept-leg "never recomputed" half is spec-proven by poisoning
-    * (CurationMaintainSpec) — a leg column here would force the oracle
-    * to replay the entire dirty-scoping machinery in SQL for no extra
-    * coverage of the theorem itself.
+  /** q216 (curation plan rebuilt from stored state) shares q214's
+    * oracle VERBATIM: the engine recomputes the plan of base ∪ one
+    * ingest batch from the persisted base state, the oracle recomputes
+    * the union from scratch — hash equality at the gate IS the rebuild
+    * law at the plan grain. That the query reads the persisted state
+    * (and not a recompute) is spec-proven by poisoning
+    * (CurationMaintainSpec).
     */
   val all: Map[String, String] = base +
     ("q216_curation_plan_maintain" -> base("q214_curation_plan"))

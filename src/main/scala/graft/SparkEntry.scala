@@ -534,12 +534,10 @@ object SparkEntry {
     // stored (memoized, q209-shared) plan
     "q217_media_plan_delete" ->
       (graft.multimodal.MediaDedup.mediaDeleteQuery _),
-    // INCREMENTAL maintenance of the q214 unified plan: stored base
-    // state + the %13 ingest batch, every tier dirty-scoped (per-row
-    // quality, touched text-groups, df-cap crossings, changed-pair-
-    // adjacent cluster relabel, new-edge-adjacent media clusters);
-    // the oracle is q214's from-scratch SQL on the union — hash
-    // equality IS the maintenance theorem at the plan grain
+    // the q214 unified plan recomputed per ingest batch from stored
+    // base state (quality flags, df tables, capped shingle indexes) +
+    // the %13 batch; the oracle is q214's from-scratch SQL on the
+    // union — hash equality IS the rebuild law at the plan grain
     "q216_curation_plan_maintain" ->
       (graft.pipeline.CurationMaintain.maintainQuery _)
   )

@@ -6,75 +6,36 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.dedup.Dedup
-import graft.multimodal.{AudioFingerprint, MediaDedup, PerceptualHash,
-  VideoKeyframes}
+import graft.multimodal.MediaDedup
 import graft.text.QualityRules
 import graft.tools.CorpusMemo
 
-/** INCREMENTAL maintenance of the UNIFIED curation plan (q214) — the
-  * q213 maintenance discipline lifted to the plan grain: a production
-  * pipeline does not recompute the corpus-wide keep/drop artifact per
-  * ingest batch; it maintains it, recomputing ONLY the rows a batch
-  * can actually change and carrying every other row verbatim from the
-  * stored plan. Each of q214's five stages has its own dirty scope,
-  * each justified by its own theorem:
+/** q216: the UNIFIED curation plan (q214) over the stored base corpus
+  * plus one ingest batch, recomputed on every call from stored base
+  * state — the reference's refresh discipline (the unified table is
+  * recomputed from the stored domain tables on every batch), with the
+  * corpus-wide aggregates kept as state instead of re-derived.
   *
-  *   1. quality — per-row (a doc's flags depend only on its own text):
-  *      batch rows are new work, base rows NEVER change.
-  *   2. exact keeper — text-group-scoped: only groups whose text the
-  *      batch touches can change their passer-scoped min-id keeper.
-  *   3. decontamination — the q213 cap-crossing theorem on the
-  *      containment screen's corpus-side df cap: a batch can push a
-  *      corpus shingle over maxDf and retroactively shrink base docs'
-  *      capped sets; dirty = batch ∪ base docs holding a crossing
-  *      shingle (the benchmark side is FIXED — an ingest stream
-  *      delivers training docs, not benchmarks).
-  *   4. text near-dup clusters — two layers: the PAIR view maintains
-  *      exactly like q213 (kept pairs clean-clean, recomputed pairs
-  *      dirty-adjacent, same crossing theorem at k=5/df=100 with the
-  *      q40 rounded-Jaccard threshold), then CC relabels ONLY
-  *      components adjacent to a changed pair — a batch edge can MERGE
-  *      two existing clusters, and every base component absorbed into
-  *      a changed union component is provably adjacent to some changed
-  *      pair, so the scoped relabel reproduces the union labels
-  *      exactly while untouched components keep their stored labels
-  *      (the poisoned-kept-leg spec pins this).
-  *   5. media dedup — the q217 insert mirror: media evidence is
-  *      pairwise, so base–base edges never change; new (batch-
-  *      adjacent) edges can only merge or extend clusters, dirty =
-  *      clusters adjacent to a new edge.
+  * The stored state is what the recompute cannot cheaply redo per
+  * batch: the base corpus docs' quality flags, and per universe (all
+  * docs; corpus = non-src0 docs) the shingle df table plus the capped
+  * inverted index. Per call, the only new work against that state is
+  * batch-sized — the batch's quality flags, its shingles, and its union
+  * df as a join against the stored df table (a shingle can cross the df
+  * cap only if the batch raised its df, so the capped union index is the
+  * stored one minus the crossing shingles plus the batch's under-cap
+  * rows). On top of those views every q214 stage runs in full: the exact
+  * keeper window, the containment screen against the src0 benchmarks,
+  * the near-dup pair self-join with CC, and the q209-shared media plan.
   *
-  * THE LAW (what the q216 oracle gates): maintained ≡ the from-scratch
-  * q214 plan of the union corpus. The oracle is q214's SQL VERBATIM —
-  * hash equality at the gate is the maintenance theorem at the plan
-  * grain. The kept/recomputed split is engine-internal (exposed to the
-  * spec via [[maintainPlanLegged]]); putting it in the gate would
-  * force the oracle to replay the whole dirty-scoping machinery for
-  * no extra coverage of the theorem.
+  * THE LAW (what the q216 oracle gates): the result ≡ the from-scratch
+  * q214 plan of the union corpus. The oracle is q214's SQL VERBATIM.
   *
-  * 100 TB shape: per ingest batch, new work is batch-sized flag
-  * computation, dirty-group keeper windows, crossing-bucket-scoped
-  * containment and pair recomputes, CC on changed components' subgraph
-  * only, and id-keyed anti/semi joins against stored state — never a
-  * corpus re-AGGREGATE: the df tables and capped inverted indexes are
-  * STATE (built once per corpus lifetime), so a run's union df is a
-  * batch-sized join against the stored df table (a shingle can cross
-  * the cap only if the batch raised its df) and the capped-union view
-  * is the stored capped index ± tiny crossing anti-joins. The stored
-  * base state is PERSISTED through the versioned snapshot chain exactly
-  * like the q213/q215 index state (one kind-tagged parquet table,
-  * fingerprint-keyed, built once per corpus lifetime): the query prices
-  * maintenance over a committed snapshot, not a session memo.
-  *
-  * DEGENERATE LIMIT (measured, SCALING.md round 15): the scopes are
-  * tight, but the work they admit is corpus-shaped — on the synthetic
-  * 100× corpus every document sits in a ~100-sibling near-dup cluster,
-  * so a ~8% batch is adjacent to ~every cluster and the relabel scope
-  * covers 99% of the plan (measured legs: 16.6% recomputed at sf0.1,
-  * 37% at 10×, 99% at 100×). That is the maintenance theorem
-  * operating at its limit, not a scoping bug; a production deployment
-  * would add the obvious cost-based switch (dirty fraction above a
-  * threshold → rebuild from scratch and skip the kept-leg machinery).
+  * A dirty-scoped variant that carried untouched rows from a stored
+  * plan was measured slower at both scales tried (sf0.1: 7.3 s vs
+  * 3.7 s; GenSf 100×: 57.5 s vs 44.4 s, OPTIMIZATION_r17.md): its fixed
+  * chain of ~180 small sequential jobs costs more than the rows it
+  * skips, so the recompute is the only path.
   */
 object CurationMaintain {
 
@@ -93,46 +54,34 @@ object CurationMaintain {
   def isBatch: org.apache.spark.sql.Column =
     col("source") =!= "src0" && col("doc_id") % BatchMod === BatchMod - 1
 
-  /** The stored base state a production deployment holds — every tier's
-    * serving artifact plus the inverted-index tables maintenance needs
-    * for dirty-scoping: the uncapped shingle index (the erasure
-    * sibling's requirement, as in q213's packed snapshot), the df
-    * tables, and the CAPPED indexes per universe — df and capped views
-    * are state so a maintenance run never re-aggregates the corpus.
+  /** The stored base state the recompute reads: df and capped views are
+    * state so a run never re-aggregates the corpus.
     */
   final case class BaseState(
-      flags: DataFrame, // (doc_id, n_tokens, pass, keep, contaminated)
-      shAll: DataFrame, // uncapped distinct (doc_id, shingle), ALL base docs
+      flags: DataFrame, // (doc_id, n_tokens, pass), base corpus docs
       dfAll: DataFrame, // (shingle, base_df) over ALL base docs
-      shCapped: DataFrame, // shAll minus over-cap shingles' rows
+      shCapped: DataFrame, // (doc_id, shingle) of ALL base docs, df ≤ MaxDf
       dfCorpus: DataFrame, // (shingle, base_df), corpus (non-src0) docs
-      shCorpusCapped: DataFrame, // corpus rows under the CORPUS-side cap
-      pairs: DataFrame, // stored q40 pair view (id_a, id_b, jaccard)
-      clusters: DataFrame, // stored CC (doc_id, cluster_id)
-      mediaEdges: DataFrame, // (id_a, id_b, modality), base media
-      mediaPlan: DataFrame, // stored q209 plan rows over base
-      plan: DataFrame) // the stored q214 plan over base
+      shCorpusCapped: DataFrame) // corpus rows under the CORPUS-side cap
 
   // ---------------------------------------------------------------------
-  // PERSISTED plan state — the q213/q215 snapshot discipline lifted to
-  // the plan grain: every BaseState view packs into ONE kind-tagged
-  // parquet snapshot (committed manifest-last through the versioned
-  // protocol, so all eleven views advance ATOMICALLY), keyed on the
-  // corpus fingerprint and the tier parameters. The capped index views
-  // are stored as BITS on the uncapped inverted-index rows (cap_all /
-  // cap_corpus) rather than duplicated row sets — readers prune by
-  // `kind` and the bit via parquet predicate pushdown. The build is
-  // paid once per corpus LIFETIME (not per session): every later
-  // bench/verify pass — and every later JVM — prices only the
-  // maintenance, which is the production amortization q216 models.
+  // PERSISTED base state — the q213/q215 snapshot discipline: every
+  // BaseState view packs into ONE kind-tagged parquet snapshot
+  // (committed manifest-last through the versioned protocol, so all
+  // views advance ATOMICALLY), keyed on the corpus fingerprint and the
+  // tier parameters. The two capped indexes are stored as BITS on one
+  // set of inverted-index rows (cap_all / cap_corpus) rather than as
+  // duplicated row sets — readers prune by `kind` and the bit via
+  // parquet predicate pushdown. The build is paid once per corpus
+  // LIFETIME (not per session).
   // ---------------------------------------------------------------------
 
   import org.apache.spark.sql.Row
-  import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType,
-    StringType, StructField, StructType}
+  import org.apache.spark.sql.types.{BooleanType, LongType, StringType,
+    StructField, StructType}
 
-  /** The packed state schema: `kind` ∈ flag | sh | dfa | dfc | pair |
-    * cc | medge | mplan | plan, each kind populating its own columns.
+  /** The packed state schema: `kind` ∈ flag | sh | dfa | dfc, each kind
+    * populating its own columns.
     */
   val StateSchema: StructType = StructType(Seq(
     StructField("kind", StringType),
@@ -141,27 +90,8 @@ object CurationMaintain {
     StructField("base_df", LongType),
     StructField("cap_all", BooleanType),
     StructField("cap_corpus", BooleanType),
-    StructField("id_a", LongType),
-    StructField("id_b", LongType),
-    StructField("jaccard", DoubleType),
-    StructField("cluster_id", LongType),
     StructField("n_tokens", LongType),
-    StructField("pass", BooleanType),
-    StructField("keep", BooleanType),
-    StructField("contam", BooleanType),
-    StructField("keeper", LongType),
-    StructField("m_action", StringType),
-    StructField("n_members", LongType),
-    StructField("modalities", StringType),
-    StructField("modality", StringType),
-    StructField("q_pass", LongType),
-    StructField("e_keep", LongType),
-    StructField("c_flag", LongType),
-    StructField("nd_keep", LongType),
-    StructField("media_action", StringType),
-    StructField("media_modalities", StringType),
-    StructField("drop_stage", StringType),
-    StructField("action", StringType)))
+    StructField("pass", BooleanType)))
 
   def emptyState(s: SparkSession): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[Row], StateSchema)
@@ -173,73 +103,43 @@ object CurationMaintain {
     }.toIndexedSeq: _*)
 
   /** Pack a built [[BaseState]] into the kind-tagged state frame. The
-    * two capped views become bits on the `sh` rows (cap_all depends
-    * only on the shingle; cap_corpus additionally on the row being in
-    * the corpus-capped subset), so the inverted index is stored once.
+    * two capped views become bits on the `sh` rows: a row is stored
+    * once if either capped view holds it.
     */
   def packState(st: BaseState): DataFrame = {
-    val shBits = st.shAll
-      .join(st.dfAll.filter(col("base_df") <= MaxDf).select(col("shingle"))
-        .withColumn("ca", lit(true)), Seq("shingle"), "left")
-      .join(st.shCorpusCapped.withColumn("cb", lit(true)),
-        Seq("doc_id", "shingle"), "left")
+    val shBits = st.shCapped.withColumn("cap_all", lit(true))
+      .join(st.shCorpusCapped.withColumn("cap_corpus", lit(true)),
+        Seq("doc_id", "shingle"), "full_outer")
       .select(lit("sh").as("kind"), col("doc_id"), col("shingle"),
-        coalesce(col("ca"), lit(false)).as("cap_all"),
-        coalesce(col("cb"), lit(false)).as("cap_corpus"))
+        coalesce(col("cap_all"), lit(false)).as("cap_all"),
+        coalesce(col("cap_corpus"), lit(false)).as("cap_corpus"))
     Seq(
       alignToState(st.flags.select(lit("flag").as("kind"), col("doc_id"),
-        col("n_tokens"), col("pass"), col("keep"),
-        col("contaminated").as("contam"))),
+        col("n_tokens"), col("pass"))),
       alignToState(shBits),
       alignToState(st.dfAll.select(lit("dfa").as("kind"), col("shingle"),
         col("base_df"))),
       alignToState(st.dfCorpus.select(lit("dfc").as("kind"), col("shingle"),
-        col("base_df"))),
-      alignToState(st.pairs.select(lit("pair").as("kind"), col("id_a"),
-        col("id_b"), col("jaccard"))),
-      alignToState(st.clusters.select(lit("cc").as("kind"), col("doc_id"),
-        col("cluster_id"))),
-      alignToState(st.mediaEdges.select(lit("medge").as("kind"), col("id_a"),
-        col("id_b"), col("modality"))),
-      alignToState(st.mediaPlan.select(lit("mplan").as("kind"), col("doc_id"),
-        col("cluster_id"), col("keeper"), col("action").as("m_action"),
-        col("n_members"), col("modalities"))),
-      alignToState(st.plan.select(lit("plan").as("kind"), col("doc_id"),
-        col("n_tokens"), col("quality_pass").as("q_pass"),
-        col("exact_keep").as("e_keep"), col("contaminated").as("c_flag"),
-        col("neardup_keep").as("nd_keep"), col("media_action"),
-        col("media_modalities"), col("drop_stage"), col("action"))))
+        col("base_df"))))
       .reduce(_ unionByName _)
   }
 
-  /** Unpack the persisted state frame into the [[BaseState]] views the
-    * maintenance body consumes — each view is a kind-pruned (and for
-    * the capped indexes bit-pruned) scan of the committed snapshot.
+  /** Unpack the persisted state frame into the [[BaseState]] views —
+    * each view is a kind-pruned (and for the capped indexes bit-pruned)
+    * scan of the committed snapshot.
     */
   def unpackState(state: DataFrame): BaseState = {
-    def of(kind: String, cols: org.apache.spark.sql.Column*): DataFrame =
-      state.filter(col("kind") === kind).select(cols: _*)
+    def of(kind: String, cols: String*): DataFrame =
+      state.filter(col("kind") === kind).select(cols.map(col): _*)
     val sh = state.filter(col("kind") === "sh")
     BaseState(
-      flags = of("flag", col("doc_id"), col("n_tokens"), col("pass"),
-        col("keep"), col("contam").as("contaminated")),
-      shAll = sh.select(col("doc_id"), col("shingle")),
-      dfAll = of("dfa", col("shingle"), col("base_df")),
+      flags = of("flag", "doc_id", "n_tokens", "pass"),
+      dfAll = of("dfa", "shingle", "base_df"),
       shCapped = sh.filter(col("cap_all"))
         .select(col("doc_id"), col("shingle")),
-      dfCorpus = of("dfc", col("shingle"), col("base_df")),
+      dfCorpus = of("dfc", "shingle", "base_df"),
       shCorpusCapped = sh.filter(col("cap_corpus"))
-        .select(col("doc_id"), col("shingle")),
-      pairs = of("pair", col("id_a"), col("id_b"), col("jaccard")),
-      clusters = of("cc", col("doc_id"), col("cluster_id")),
-      mediaEdges = of("medge", col("id_a"), col("id_b"), col("modality")),
-      mediaPlan = of("mplan", col("doc_id"), col("cluster_id"), col("keeper"),
-        col("m_action").as("action"), col("n_members"), col("modalities")),
-      plan = of("plan", col("doc_id"), col("n_tokens"),
-        col("q_pass").as("quality_pass"), col("e_keep").as("exact_keep"),
-        col("c_flag").as("contaminated"), col("nd_keep").as("neardup_keep"),
-        col("media_action"), col("media_modalities"), col("drop_stage"),
-        col("action")))
+        .select(col("doc_id"), col("shingle")))
   }
 
   /** Where the q216 base-state snapshot chain lives for a corpus — the
@@ -252,16 +152,9 @@ object CurationMaintain {
     s"${sys.props("java.io.tmpdir")}/graft-state/curation-plan-k$K-" +
       s"df$MaxDf-mod$BatchMod/${CorpusMemo.fingerprint(s, dir)}"
 
-  /** (df table, capped index) for one universe — stored state, so a
-    * maintenance run never re-aggregates the corpus (the sf10 profile
-    * had two full-shingle groupBys + a corpus-scale capped-union
-    * checkpoint per run, ~70 s of the leg; production keeps both in
-    * the snapshot exactly like q213's packed state).
-    */
   /** Union df for BATCH shingles only — a batch-sized join against the
     * STORED df table (never a corpus re-aggregate): a shingle can cross
-    * the cap only if the batch raised its df. Shared by the maintain
-    * and rebuild sides of the cost switch.
+    * the cap only if the batch raised its df.
     */
   private def batchUnionDf(dfBatch: DataFrame,
       dfStored: DataFrame): DataFrame =
@@ -271,7 +164,13 @@ object CurationMaintain {
         (coalesce(col("base_df"), lit(0L)) + col("batch_df")).as("df"))
       .localCheckpoint()
 
-  private[pipeline] def dfAndCapped(sh: DataFrame): (DataFrame, DataFrame) = {
+  /** (df table, capped index) for one universe — stored state, so a run
+    * never re-aggregates the corpus (the sf10 profile had two
+    * full-shingle groupBys + a corpus-scale capped-union checkpoint per
+    * run, ~70 s; both live in the snapshot exactly like q213's packed
+    * state).
+    */
+  private def dfAndCapped(sh: DataFrame): (DataFrame, DataFrame) = {
     val df = sh.groupBy(col("shingle"))
       .agg(count(lit(1)).as("base_df")).localCheckpoint()
     val capped = sh.join(df.filter(col("base_df") <= MaxDf)
@@ -280,346 +179,72 @@ object CurationMaintain {
     (df, capped)
   }
 
-  def buildBaseState(s: SparkSession, base: DataFrame): BaseState = {
-    val b = base.localCheckpoint()
-    val flags = ReleaseFunnel.curationFlags(b).localCheckpoint()
-    val shAll = Dedup.shingles(b, K).localCheckpoint()
+  /** Build the base state of `base` (the corpus minus its batch). */
+  def buildBaseState(base: DataFrame): BaseState = {
+    val flags = QualityRules.qualityFlags(base.filter(col("source") =!= "src0"))
+      .select(col("doc_id"), col("n_tokens"), col("pass")).localCheckpoint()
+    val shAll = Dedup.shingles(base, K).localCheckpoint()
     val (dfAll, shCapped) = dfAndCapped(shAll)
     val shCorpus = shAll.join(flags.select(col("doc_id")), Seq("doc_id"),
       "left_semi")
     val (dfCorpus, shCorpusCapped) = dfAndCapped(shCorpus)
-    val pairs = Dedup.jaccardPairs(b, K, JaccardThreshold, MaxDf)
-      .localCheckpoint()
-    val clusters = Dedup.connectedComponents(
-      pairs.select(col("id_a"), col("id_b"))).localCheckpoint()
-    val mediaEdges = MediaDedup.modalityEdges(
-      PerceptualHash.hashImages(s, PerceptualHash.imageCorpus(s, b)).toDF(),
-      AudioFingerprint.fingerprintClips(s,
-        AudioFingerprint.audioCorpus(s, b)).toDF(),
-      VideoKeyframes.keyframes(s, VideoKeyframes.videoCorpus(s, b)).toDF())
-      .localCheckpoint()
-    val mediaPlan = MediaDedup.planFromEdges(mediaEdges).localCheckpoint()
-    val plan = CurationPlan.planFromFlags(flags, clusters, mediaPlan)
-      .localCheckpoint()
-    BaseState(flags, shAll, dfAll, shCapped, dfCorpus, shCorpusCapped,
-      pairs, clusters, mediaEdges, mediaPlan, plan)
+    CorpusMemo.unpersistCheckpoints(shAll)
+    BaseState(flags, dfAll, shCapped, dfCorpus, shCorpusCapped)
   }
 
-  /** The PERSISTED base state for the q216 maintenance: read the
-    * committed snapshot if one exists; otherwise build it once from the
-    * base corpus and commit it through the snapshot protocol
+  /** The PERSISTED packed-state frame for q216: read the committed
+    * snapshot if one exists; otherwise build it once from the base
+    * corpus and commit it through the snapshot protocol
     * ([[graft.stream.Ingest.advanceSnapshot]] — manifest-last,
-    * object-store safe). Replaces the former session memo: every call
-    * after the first — including every future session over the
-    * unchanged corpus — prices ONLY the maintenance (the q213/q215
-    * amortization; the build's localCheckpoint blocks are reclaimed as
+    * object-store safe). Every call after the first — including every
+    * future session over the unchanged corpus — prices only the
+    * recompute (the build's localCheckpoint blocks are reclaimed as
     * soon as the snapshot commits).
-    */
-  def baseStateShared(s: SparkSession, dir: String): BaseState =
-    unpackState(persistedStateFrame(s, dir))
-
-  /** The committed packed-state frame (building + committing it first
-    * if this corpus has no chain yet).
     */
   def persistedStateFrame(s: SparkSession, dir: String): DataFrame = {
     val table = stateTablePath(s, dir)
     val p = graft.stream.Ingest.latestSnapshotPath(s, table).getOrElse {
       graft.dedup.DedupMaintain.pruneStaleChains(s, table)
-      val st = buildBaseState(s, Tables.documents(s, dir).filter(!isBatch))
+      val st = buildBaseState(Tables.documents(s, dir).filter(!isBatch))
       // Range-cluster the snapshot by kind on write (guide §6): the read
       // path scans the table once per view, so kind-clustered files +
       // row groups let every scan skip the other kinds' bytes via
       // min/max stats. The range exchange is AQE-coalesced — one file
-      // on a small corpus, shuffle.partitions kind-runs at scale —
-      // where the raw union wrote partition-count tiny files that every
-      // one of the ~20 per-pass scans had to open.
+      // on a small corpus, shuffle.partitions kind-runs at scale.
       val path = graft.stream.Ingest.advanceSnapshot(s, table,
         emptyState(s)) { _ =>
         packState(st)
-          .repartitionByRange(col("kind"), col("doc_id"), col("id_a"),
-            col("shingle"))
-          .sortWithinPartitions(col("kind"), col("doc_id"), col("id_a"),
-            col("shingle"))
+          .repartitionByRange(col("kind"), col("doc_id"), col("shingle"))
+          .sortWithinPartitions(col("kind"), col("doc_id"), col("shingle"))
       }
-      CorpusMemo.unpersistCheckpoints(st.flags, st.shAll, st.dfAll,
-        st.shCapped, st.dfCorpus, st.shCorpusCapped, st.pairs, st.clusters,
-        st.mediaEdges, st.mediaPlan, st.plan)
+      CorpusMemo.unpersistCheckpoints(st.flags, st.dfAll, st.shCapped,
+        st.dfCorpus, st.shCorpusCapped)
       path
     }
     s.read.schema(StateSchema).parquet(p)
   }
 
-  private def ends(p: DataFrame): DataFrame =
-    p.select(col("id_a").as("doc_id"))
-      .unionByName(p.select(col("id_b").as("doc_id")))
-
-  /** One maintenance step: the maintained plan over base state + one
-    * ingest batch, leg-tagged (kept = carried verbatim from
-    * `st.plan`; recomputed = rebuilt from the maintained tier views).
-    * `unionMediaEdges` is the cross-modality edge list over the UNION
-    * fingerprint tables (base–base rows are bit-identical to
-    * `st.mediaEdges` — media evidence is pairwise — so only its
-    * batch-adjacent rows are consulted as new edges; the query path
-    * reads it from the q209/q217-shared memo at zero marginal cost).
+  /** The union plan computed from the stored state: `docs` is the whole
+    * corpus (base ∪ batch), `mediaPlan` the q209 media plan over it.
+    * The df tables and capped indexes are assembled with batch-sized
+    * crossing joins (rebuilding those per run would be the r15-measured
+    * 70 s regression); everything else runs in full.
     */
-  def maintainPlanLegged(st: BaseState, docs: DataFrame,
-      unionMediaEdges: DataFrame): DataFrame = {
-    val batch = docs.filter(isBatch).localCheckpoint()
-    val batchIds = batch.select(col("doc_id"))
-    val corpusU = docs.filter(col("source") =!= "src0")
-    val evalSet = docs.filter(col("source") === "src0")
-
-    // The five tiers are INDEPENDENT given `batch` (tiers 3 and 4 also
-    // share the batch shingle table): each is a chain of eager
-    // `localCheckpoint` materializations plus (tiers 4/5) a CC loop, and
-    // running them sequentially left the cluster idle through every
-    // chain's tail. Overlap them from the driver (guide §2.6): tier 1+2
-    // and tier 5 run beside the shingle-table build, then the two
-    // shingle consumers (tier 3, tier 4) run beside each other. The
-    // dataflow below is the sequential body verbatim, only grouped.
-    val ((qAll, exactDirtyIds, keepAll), (scopeMedia, mediaU),
-        ((contamDirty, contamAll), (scopeText, clustersU))) =
-      graft.tools.Overlap.par3(
-      {
-        // ---- tier 1+2: quality (batch-only new work) + dirty-group keeper
-        val qAll = st.flags.select(col("doc_id"), col("n_tokens"), col("pass"))
-          .unionByName(QualityRules.qualityFlags(batch)
-            .select(col("doc_id"), col("n_tokens"), col("pass")))
-          .localCheckpoint()
-        val dirtyGroup = corpusU.select(col("doc_id"), col("text"))
-          .join(batch.select(col("text")).distinct(), Seq("text"), "left_semi")
-        val exactDirtyIds = dirtyGroup.select(col("doc_id")).localCheckpoint()
-        val keepRecomp = dirtyGroup
-          .join(qAll.select(col("doc_id"), col("pass")), Seq("doc_id"))
-          .withColumn("keeper",
-            min(when(col("pass"), col("doc_id")))
-              .over(Window.partitionBy(col("text"))))
-          .select(col("doc_id"),
-            (col("pass") && col("doc_id") === col("keeper")).as("keep"))
-        val keepAll = st.flags.join(exactDirtyIds, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("keep"))
-          .unionByName(keepRecomp)
-        (qAll, exactDirtyIds, keepAll)
-      },
-      {
-        // ---- tier 5: media — the q217 insert mirror
-        val newMedia = unionMediaEdges
-          .join(batchIds.select(col("doc_id").as("id_a")), Seq("id_a"),
-            "left_semi")
-          .unionByName(unionMediaEdges
-            .join(batchIds.select(col("doc_id").as("id_b")), Seq("id_b"),
-              "left_semi"))
-          .distinct().localCheckpoint()
-        val newEnds = ends(newMedia).distinct()
-        val dirtyMediaClusters = st.mediaPlan.join(newEnds, Seq("doc_id"),
-            "left_semi")
-          .select(col("cluster_id")).distinct()
-        // semi-side + recomputedDocs consumers only: distinct dropped
-        val scopeMedia = st.mediaPlan
-          .join(dirtyMediaClusters, Seq("cluster_id"), "left_semi")
-          .select(col("doc_id")).unionByName(newEnds)
-          .localCheckpoint()
-        val mediaU = st.mediaPlan
-          .join(dirtyMediaClusters, Seq("cluster_id"), "left_anti")
-          .select(col("doc_id"), col("cluster_id"), col("keeper"),
-            col("action"), col("n_members"), col("modalities"))
-          .unionByName(MediaDedup.planFromEdges(st.mediaEdges
-            .join(scopeMedia.select(col("doc_id").as("id_a")), Seq("id_a"),
-              "left_semi")
-            .unionByName(newMedia)))
-        (scopeMedia, mediaU)
-      },
-      {
-        val shBatch = Dedup.shingles(batch, K).localCheckpoint()
-        val dfBatch = shBatch.groupBy(col("shingle"))
-          .agg(count(lit(1)).as("batch_df"))
-        graft.tools.Overlap.par2(
-        {
-          // ---- tier 3: decontamination — corpus-side df cap crossings. A
-          // shingle can CROSS only if the batch raised its df, so the union
-          // df is computed for BATCH shingles only (batch-sized join against
-          // the STORED df table — never a corpus re-aggregate), and the
-          // capped-union view is assembled dirty-scoped from the STORED
-          // capped index: dirty docs' stored rows minus newly-over-cap
-          // shingles, plus the batch's under-cap rows.
-          val dfCU = batchUnionDf(dfBatch, st.dfCorpus)
-          val crossingC = dfCU.filter(col("base_df") <= MaxDf
-              && col("df") > MaxDf)
-            .select(col("shingle"))
-          // crossing shingles were under the cap in base, so their base rows
-          // live in the STORED capped index — the semi is complete
-          val contamDirty = st.shCorpusCapped.join(crossingC, Seq("shingle"),
-              "left_semi")
-            .select(col("doc_id")).unionByName(batchIds).distinct()
-            .localCheckpoint()
-          val overCapC = dfCU.filter(col("df") > MaxDf).select(col("shingle"))
-          val shCU = st.shCorpusCapped.join(crossingC, Seq("shingle"),
-              "left_anti")
-            .unionByName(shBatch.join(overCapC, Seq("shingle"), "left_anti"))
-          val shE = Dedup.shingles(evalSet, K).localCheckpoint()
-          val evalSizes = shE.groupBy(col("doc_id").as("eval_id"))
-            .agg(count(lit(1)).as("n_eval_sh"))
-          val contamRecompIds = shCU.join(contamDirty, Seq("doc_id"),
-              "left_semi")
-            .as("c")
-            .join(shE.as("e"), col("c.shingle") === col("e.shingle"))
-            .groupBy(col("c.doc_id").as("doc_id"),
-              col("e.doc_id").as("eval_id"))
-            .agg(count(lit(1)).as("n_common"))
-            .join(evalSizes, "eval_id")
-            .filter(round(col("n_common").cast("double") / col("n_eval_sh"), 4)
-              >= ContainThreshold)
-            .select(col("doc_id")).distinct()
-          val contamAll = st.flags.join(contamDirty, Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), col("contaminated"))
-            .unionByName(contamDirty
-              .join(contamRecompIds.withColumn("c2", lit(true)), Seq("doc_id"),
-                "left")
-              .select(col("doc_id"),
-                coalesce(col("c2"), lit(false)).as("contaminated")))
-          (contamDirty, contamAll)
-        },
-        {
-          // ---- tier 4: the pair view maintains like q213, then the scoped
-          // CC relabel (only components adjacent to a changed pair). Same
-          // stored-state discipline as tier 3: batch-scoped union df,
-          // capped-union view assembled from the stored capped index with a
-          // tiny crossing anti-join — the only corpus-scale work left is the
-          // dirty×clean candidate join through the inverted index itself.
-          val dfAU = batchUnionDf(dfBatch, st.dfAll)
-          val crossingA = dfAU.filter(col("base_df") <= MaxDf
-              && col("df") > MaxDf)
-            .select(col("shingle"))
-          // no distinct: every consumer is a semi/anti-join side, which
-          // is dup-tolerant — the dedup exchange bought nothing (§2.4)
-          val dirtyDocsA = st.shCapped.join(crossingA, Seq("shingle"),
-              "left_semi")
-            .select(col("doc_id")).unionByName(batchIds)
-            .localCheckpoint()
-          val overCapA = dfAU.filter(col("df") > MaxDf).select(col("shingle"))
-          val shAUbase = st.shCapped.join(crossingA, Seq("shingle"),
-            "left_anti")
-          val shBatchCapped = shBatch.join(overCapA, Seq("shingle"),
-            "left_anti")
-          // batch docs are all dirty, so the clean side is base-only; the
-          // dirty side is dirty base rows ∪ the batch's under-cap rows
-          val shD = shAUbase.join(dirtyDocsA, Seq("doc_id"), "left_semi")
-            .unionByName(shBatchCapped)
-          val shC2 = shAUbase.join(dirtyDocsA, Seq("doc_id"), "left_anti")
-          val dc = shD.as("a").join(shC2.as("b"),
-              col("a.shingle") === col("b.shingle"))
-            .select(least(col("a.doc_id"), col("b.doc_id")).as("id_a"),
-              greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
-          val dd = shD.as("a").join(shD.as("b"),
-              col("a.shingle") === col("b.shingle")
-                && col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          val common = dc.unionByName(dd)
-            .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_common"))
-          val participants = common.select(col("id_a").as("doc_id"))
-            .unionByName(common.select(col("id_b").as("doc_id"))).distinct()
-          val sizes = shAUbase.unionByName(shBatchCapped)
-            .join(participants, Seq("doc_id"), "left_semi")
-            .groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-          // the q40 threshold semantics VERBATIM (rounded quotient, not the
-          // q213 integer test — the stored view is q40's)
-          val recompPairs = common
-            .join(sizes.select(col("doc_id").as("id_a"), col("n_sh").as("n_a")),
-              Seq("id_a"))
-            .join(sizes.select(col("doc_id").as("id_b"), col("n_sh").as("n_b")),
-              Seq("id_b"))
-            .withColumn("jaccard", round(col("n_common").cast("double")
-              / (col("n_a") + col("n_b") - col("n_common")), 4))
-            .filter(col("jaccard") >= JaccardThreshold)
-            .select(col("id_a"), col("id_b"), col("jaccard"))
-            .localCheckpoint()
-          val keptPairs = st.pairs
-            .join(dirtyDocsA.select(col("doc_id").as("id_a")), Seq("id_a"),
-              "left_anti")
-            .join(dirtyDocsA.select(col("doc_id").as("id_b")), Seq("id_b"),
-              "left_anti")
-          // consumed exactly once (the scoped CC input), so no
-          // checkpoint: the union folds into CC's own first
-          // materialization instead of paying its own driver round trip
-          val maintainedPairs = keptPairs.unionByName(recompPairs)
-          // changed pairs = recomputed ∪ stored-with-a-dirty-endpoint; every
-          // base component merged/split by the batch touches one of their
-          // endpoints, so this is the exact relabel frontier
-          val storedChanged = st.pairs
-            .join(dirtyDocsA.select(col("doc_id").as("id_a")), Seq("id_a"),
-              "left_semi")
-            .unionByName(st.pairs
-              .join(dirtyDocsA.select(col("doc_id").as("id_b")), Seq("id_b"),
-                "left_semi"))
-          // changedEnds/scopeText feed only semi-join sides and the
-          // recomputedDocs union (itself dup-tolerant), so their dedup
-          // exchanges are dropped too
-          val changedEnds = ends(recompPairs).unionByName(ends(storedChanged))
-            .localCheckpoint()
-          val dirtyClusterIds = st.clusters.join(changedEnds, Seq("doc_id"),
-              "left_semi")
-            .select(col("cluster_id")).distinct()
-          val scopeText = st.clusters.join(dirtyClusterIds, Seq("cluster_id"),
-              "left_semi")
-            .select(col("doc_id")).unionByName(changedEnds)
-            .localCheckpoint()
-          val clustersU = st.clusters
-            .join(dirtyClusterIds, Seq("cluster_id"), "left_anti")
-            .unionByName(Dedup.connectedComponents(maintainedPairs
-              .join(scopeText.select(col("doc_id").as("id_a")), Seq("id_a"),
-                "left_semi")
-              .select(col("id_a"), col("id_b"))))
-          (scopeText, clustersU)
-        })
-      })
-    val flagsU = qAll.join(keepAll, Seq("doc_id"))
-      .join(contamAll, Seq("doc_id"))
-      .select(col("doc_id"), col("n_tokens"), col("pass"), col("keep"),
-        col("contaminated"))
-
-    // ---- compose: recompute the union of every tier's dirty scope,
-    // carry everything else verbatim from the stored plan. Both
-    // consumers (the kept anti-join, the recomputed semi-join) are
-    // dup-tolerant and every source frame is already checkpointed, so
-    // neither the dedup exchange nor a materialization of the bare
-    // union pays for itself.
-    val recomputedDocs = batchIds.unionByName(exactDirtyIds)
-      .unionByName(contamDirty).unionByName(scopeText)
-      .unionByName(scopeMedia)
-    val kept = st.plan.join(recomputedDocs, Seq("doc_id"), "left_anti")
-      .withColumn("leg", lit("kept"))
-    val recomputed = CurationPlan.planFromFlags(
-        flagsU.join(recomputedDocs, Seq("doc_id"), "left_semi"),
-        clustersU, mediaU)
-      .withColumn("leg", lit("recomputed"))
-    kept.unionByName(recomputed)
-  }
-
-  /** The REBUILD side of the cost switch: the union plan computed from
-    * the SAME stored state (df tables and capped indexes assembled with
-    * the same batch-sized crossing joins — rebuilding those per run
-    * would be the r15-measured 70 s/leg regression), but with NO dirty
-    * scoping anywhere: full keeper window, full containment join, full
-    * inverted-index pair self-join, full CC, full media plan. By the
-    * maintenance law both sides equal the from-scratch q214 plan of the
-    * union, so the switch can never change the result — only which
-    * provably-identical plan computes it. Every row is leg-tagged
-    * `recomputed` (nothing is carried).
-    */
-  def rebuildPlanLegged(st: BaseState, docs: DataFrame,
-      unionMediaEdges: DataFrame): DataFrame = {
+  def rebuildPlan(st: BaseState, docs: DataFrame,
+      mediaPlan: DataFrame): DataFrame = {
     val batch = docs.filter(isBatch).localCheckpoint()
     val corpusU = docs.filter(col("source") =!= "src0")
     val evalSet = docs.filter(col("source") === "src0")
 
-    val (qAll, mediaU, (contamAll, clustersU)) = graft.tools.Overlap.par3(
+    // the quality union and the shingle chain are independent eager
+    // materializations: overlap them from the driver (guide §2.6)
+    val (qAll, (contamAll, clustersU)) = graft.tools.Overlap.par2(
       {
-        st.flags.select(col("doc_id"), col("n_tokens"), col("pass"))
+        st.flags
           .unionByName(QualityRules.qualityFlags(batch)
             .select(col("doc_id"), col("n_tokens"), col("pass")))
           .localCheckpoint()
       },
-      { MediaDedup.planFromEdges(unionMediaEdges).localCheckpoint() },
       {
         val shBatch = Dedup.shingles(batch, K).localCheckpoint()
         val dfBatch = shBatch.groupBy(col("shingle"))
@@ -692,101 +317,15 @@ object CurationMaintain {
       .join(contamAll, Seq("doc_id"))
       .select(col("doc_id"), col("n_tokens"), col("pass"), col("keep"),
         col("contaminated"))
-    CurationPlan.planFromFlags(flagsU, clustersU, mediaU)
-      .withColumn("leg", lit("recomputed"))
+    CurationPlan.planFromFlags(flagsU, clustersU, mediaPlan)
   }
 
-  /** Dirty-fraction estimate from STORED state only (one scalar
-    * aggregate over the snapshot, no maintenance work): the %BatchMod
-    * batch is an iid slice of the corpus, so its expected size is
-    * planN / BatchMod, and a batch doc that near-dups into a stored
-    * cluster dirties the whole cluster — expected member-fraction hit
-    * ≈ coverage · (1 − exp(−B·s̄/N)) for mean cluster size s̄ (the
-    * Poisson-hit approximation), plus the batch itself. Exact-text and
-    * cap-crossing scopes are second-order and ignored: the estimate
-    * feeds a COST switch between two result-identical plans, so it
-    * only needs to be right about which side of the crossover the
-    * corpus is on. Empirically true ≈ 2·est on both calibration
-    * corpora (sf0.1: est 0.083, true 16.6 %; GenSf 100×: est 0.083,
-    * true ~16 % — GenSf preserves the cluster structure, so the
-    * organic dirty fraction is scale-invariant).
+  /** q216: the q214 plan of the corpus (stored base state + the %13
+    * ingest batch), gated against q214's from-scratch oracle on the
+    * union. The media plan is the q209-shared memo over the union.
     */
-  def dirtyFractionEstimate(state: DataFrame): Double =
-    dirtyEstimateAndSize(state)._1
-
-  /** (dirty-fraction estimate, stored plan size) in one scalar
-    * aggregate over the snapshot.
-    */
-  def dirtyEstimateAndSize(state: DataFrame): (Double, Long) = {
-    val r = state.filter(col("kind").isin("plan", "cc"))
-      .groupBy(col("kind"))
-      .agg(count(lit(1)).as("n"),
-        count_distinct(col("cluster_id")).as("k"))
-      .collect().map(row => row.getString(0) ->
-        ((row.getLong(1), row.getLong(2)))).toMap
-    val planN = r.get("plan").map(_._1).getOrElse(0L)
-    if (planN == 0) return (1.0, 0L) // empty base: everything is the batch
-    val ccRows = r.get("cc").map(_._1).getOrElse(0L).toDouble
-    val ccK = math.max(1L, r.get("cc").map(_._2).getOrElse(0L)).toDouble
-    val b = 1.0 / BatchMod
-    val meanSize = ccRows / ccK
-    (math.min(1.0,
-      (ccRows / planN.toDouble) * (1.0 - math.exp(-b * meanSize)) + b),
-      planN)
-  }
-
-  /** Dirty fraction above which the scoped maintenance loses to the
-    * plain rebuild AT SCALE: maintain ≈ a(N) + true·heavy(N) vs
-    * rebuild ≈ heavy(N), so maintain wins iff true < 1 − a/heavy; with
-    * true ≈ 2·est (measured, see [[dirtyFractionEstimate]]) and
-    * a/heavy ≈ 0.2 extrapolated at the ≥[[RebuildFloorDocs]] regime,
-    * the est-threshold is (1 − 0.2)/2 = 0.4.
-    */
-  val RebuildFraction = 0.4
-
-  /** Corpus size below which the rebuild side wins REGARDLESS of dirty
-    * fraction — the scoped maintenance's fixed stage chain (~180
-    * sequential scoping/anti-join/relabel jobs reading the full stored
-    * state) costs more than simply recomputing the plan from the stored
-    * index views until the corpus is large enough to amortize it.
-    * MEASURED, solo A/B with `tools/SwitchAb` (noop sink, min-of-2,
-    * outputs proven identical both ways, table in OPTIMIZATION_r17.md):
-    * sf0.1 (26 k docs, true dirty 16.6 %): maintain 7.3 s, rebuild
-    * 3.7 s; GenSf 100× (2.6 M docs, same structure): maintain 57.5 s,
-    * rebuild 44.4 s — rebuild wins BOTH, but the overhead-to-heavy
-    * ratio a/heavy falls 1.8 → 1.1 per 100×, crossing 1−true ≈ 0.8
-    * around 10⁹ docs on the log-linear trend. The floor is data-sized
-    * (not core-count-sized): local corpora route rebuild, the 100 TB
-    * corpus (~10¹⁰ docs) routes by [[RebuildFraction]].
-    */
-  val RebuildFloorDocs = 1000000000L
-
-  /** Cost routing for [[maintainQuery]]: both sides are proven
-    * result-identical (spec + SwitchAb exceptAll at sf0.1 and 100×),
-    * so this chooses only which plan computes the answer.
-    */
-  def routeRebuild(state: DataFrame): Boolean = {
-    val (est, planN) = dirtyEstimateAndSize(state)
-    planN < RebuildFloorDocs || est > RebuildFraction
-  }
-
-  /** q216: the maintained q214 plan — stored base state + the %13
-    * ingest batch, gated against q214's from-scratch oracle on the
-    * union. Same output shape as q214 (the leg is spec-surface only).
-    * Routes through [[maintainPlanLegged]] or [[rebuildPlanLegged]] by
-    * [[routeRebuild]]'s cost model over the stored snapshot — both
-    * sides equal the from-scratch union plan (the law), so the switch
-    * is cost-only.
-    */
-  def maintainQuery(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val state = persistedStateFrame(s, dir)
-    val st = unpackState(state)
-    val unionEdges = MediaDedup.planShared(s, dir)._1
-    val legged =
-      if (routeRebuild(state)) rebuildPlanLegged(st, docs, unionEdges)
-      else maintainPlanLegged(st, docs, unionEdges)
-    legged
-      .drop("leg").orderBy(col("doc_id"))
-  }
+  def maintainQuery(s: SparkSession, dir: String): DataFrame =
+    rebuildPlan(unpackState(persistedStateFrame(s, dir)),
+      Tables.documents(s, dir),
+      MediaDedup.planShared(s, dir)._2).orderBy(col("doc_id"))
 }

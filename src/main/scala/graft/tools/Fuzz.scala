@@ -258,11 +258,11 @@ object Fuzz {
     // carryover and the survivor re-closure replayed per seed by the
     // oracle's second recursive walk
     "q217_media_plan_delete",
-    // curation-plan maintenance (round 15): per-seed %13 batches hit
-    // every dirty scope differently (touched text groups, df-cap
-    // crossings, cluster merges, new media edges); the oracle is
-    // q214's from-scratch plan, so each seed replays the maintenance
-    // theorem at the plan grain — and q214's own surface transitively
+    // curation plan rebuilt from stored state (round 15): per-seed %13
+    // batches shift text groups, df-cap crossings, cluster merges and
+    // media edges; the oracle is q214's from-scratch plan, so each seed
+    // replays the rebuild law at the plan grain — and q214's own
+    // surface transitively
     "q216_curation_plan_maintain")
 
   private val MicrosPerDay = 86400L * 1000000L

@@ -39,15 +39,4 @@ object Overlap {
     val r = par(() => a: Any, () => b: Any)
     (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
   }
-
-  def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    val r = par(() => a: Any, () => b: Any, () => c: Any)
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
-  }
-
-  def par4[A, B, C, D](a: => A, b: => B, c: => C, d: => D): (A, B, C, D) = {
-    val r = par(() => a: Any, () => b: Any, () => c: Any, () => d: Any)
-    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C],
-      r(3).asInstanceOf[D])
-  }
 }

@@ -31,6 +31,14 @@ class FuzzSpec extends SparkSpec {
 
   private val seeds = Seq(0, 7, 19)
 
+  // one fresh corpus root per suite run, so two runs never share corpora
+  private val root =
+    java.nio.file.Files.createTempDirectory("graft-fuzz-spec").toFile
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteDirectory(root)
+    finally super.afterAll()
+
   test("generator is seed-deterministic and seed-sensitive") {
     val a = Fuzz.genEvents(spark, 5).collect().toSeq
     val b = Fuzz.genEvents(spark, 5).collect().toSeq
@@ -65,7 +73,7 @@ class FuzzSpec extends SparkSpec {
 
   test("sessionization triple parity holds on every fuzz corpus") {
     for (seed <- seeds) {
-      val dir = s"/tmp/graft-fuzz-spec/s$seed"
+      val dir = s"$root/s$seed"
       Fuzz.writeCorpus(spark, seed, dir)
       val q45 = graft.analytics.CoreQueries.eventSessions(spark, dir)
         .select("user_id", "session_id", "n_events", "start_us", "end_us",
@@ -98,7 +106,7 @@ class FuzzSpec extends SparkSpec {
     // knife edge. The q199 oracle now replicates Spark's semantics via a
     // VARCHAR→DECIMAL round-trip (re-swept 20/20); this pin reproduces
     // the CONDITION so the find and its analysis cannot silently rot.
-    val dir = "/tmp/graft-fuzz-spec/s3-pin"
+    val dir = s"$root/s3-pin"
     Fuzz.genEvents(spark, 3).write.mode("overwrite")
       .parquet(s"$dir/events.parquet")
     val events = spark.read.parquet(s"$dir/events.parquet")

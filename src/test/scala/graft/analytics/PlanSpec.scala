@@ -1144,11 +1144,26 @@ class PlanSpec extends SparkSpec {
     assert(wins.forall(_.partitionSpec.nonEmpty), plan)
   }
 
-  test("q216: the maintained plan recomputes dirty scopes only — every " +
-    "window is keyed (the batch keeper re-window is text-partitioned), " +
-    "no cartesian/BNLJ anywhere in the composition") {
+  test("q216: the plan is rebuilt from the PERSISTED curation state " +
+    "(kind-tagged scan, no in-query corpus re-aggregate); every window " +
+    "is keyed (the keeper window is text-partitioned), no cartesian/BNLJ " +
+    "anywhere in the composition") {
     import org.apache.spark.sql.execution.window.WindowExec
     val df = graft.pipeline.CurationMaintain.maintainQuery(spark, dir)
+    val stateCols = graft.pipeline.CurationMaintain.StateSchema.fieldNames.toSet
+    val (stateScans, docScans) = scans(df).partition(
+      _.schema.fieldNames.contains("kind"))
+    assert(stateScans.nonEmpty,
+      "q216 must read the PERSISTED state, not rebuild it in-query")
+    stateScans.foreach { scan =>
+      assert(scan.schema.fieldNames.toSet.subsetOf(stateCols),
+        scan.schema.fieldNames.mkString(","))
+    }
+    docScans.foreach { scan =>
+      assert(scan.schema.fieldNames.toSet
+        .subsetOf(Set("doc_id", "text", "source")),
+        scan.schema.fieldNames.mkString(","))
+    }
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
